@@ -1517,6 +1517,14 @@ class IceliteTable:
                     "partitioning"
                 )
 
+    def _note_write(self, t_start: float, t_written: float, n_files: int) -> None:
+        """Record the last commit's write breakdown in ``last_write_timings``."""
+        self.last_write_timings = {
+            "write_s": round(t_written - t_start, 2),
+            "manifest_s": round(time.time() - t_written, 2),
+            "n_files": n_files,
+        }
+
     def _write_partition_files(
         self, df: DataFrame, partition_col: str | None, cluster: str = "roundrobin"
     ) -> dict:
@@ -1530,6 +1538,7 @@ class IceliteTable:
         commit_dir = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex[:12]}")
         if partition_col is None:
             df.write.mode("overwrite").parquet(commit_dir)
+            t_written = time.time()
             import pyarrow.parquet as pq
 
             paths = [
@@ -1546,6 +1555,7 @@ class IceliteTable:
             rows = int(sum(pf.metadata.num_rows for pf in pfs))
             files = [os.path.relpath(p, self.root) for p in paths]
             stats = [_file_stats(pf, scols, self.STATS_MAX_STR) for pf in pfs]
+            self._note_write(t_start, t_written, len(paths))
             return {"__all__": {"files": files, "rows": rows, "stats": stats}}
         # write clustering tradeoff:
         #   asis — NO extra exchange: write straight from the caller's
@@ -1617,11 +1627,7 @@ class IceliteTable:
                 # per-file column min/max, aligned with `files` (fmt 2)
                 "stats": [meta[f][1] for f in fs],
             }
-        self.last_write_timings = {
-            "write_s": round(t_written - t_start, 2),
-            "manifest_s": round(time.time() - t_written, 2),
-            "n_files": len(all_files),
-        }
+        self._note_write(t_start, t_written, len(all_files))
         return manifest
 
     def _write_partition_files_direct(
@@ -1705,11 +1711,7 @@ class IceliteTable:
             m["files"].append(e.path)
             m["rows"] += int(e.rows)
             m["stats"].append(stats[e.path])
-        self.last_write_timings = {
-            "write_s": round(t_written - t_start, 2),
-            "manifest_s": round(time.time() - t_written, 2),
-            "n_files": len(entries),
-        }
+        self._note_write(t_start, t_written, len(entries))
         return manifest
 
     def append(

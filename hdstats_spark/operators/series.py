@@ -10,9 +10,12 @@ Python-dispatch and the Weiszfeld iteration overhead across series
 (~50×+ on many-small-series workloads) while keeping results identical.
 
 Skew note: one row per series bounds group size at the hot-conversation
-length (10^4 buckets ≈ 320 KB — far under Arrow limits); padded-tensor blowup
-from mixing one hot series with many short ones in a batch is bounded by
-length-sorted chunking (_chunks_by_cells).
+length (10^4 buckets ≈ 320 KB — far under Arrow limits).  Padding is bounded
+by length-class chunking (_chunks_by_cells): series are sorted by length and
+a chunk ends at the cell budget OR at the first series longer than 2x the
+chunk's shortest, so one hot series never pads a batch of short ones to its
+length (nor makes them run its Weiszfeld iterations on that padding); a
+chunk's padded tensor holds at most 2x its real cells.
 """
 
 from __future__ import annotations
@@ -78,17 +81,17 @@ def series_table(
 
 def _chunks_by_cells(lens: np.ndarray, p: int, budget: int = _CELL_BUDGET):
     """Yield index arrays sorted by series length such that each chunk's
-    padded tensor stays under the cell budget."""
+    padded tensor stays under the cell budget and no series in a chunk is
+    more than 2x the chunk's shortest (one length class per chunk)."""
     order = np.argsort(lens, kind="mergesort")
     start = 0
     while start < len(order):
         end = start + 1
-        nmax = lens[order[start]]
+        nmin = lens[order[start]]
         while end < len(order):
-            cand = max(nmax, lens[order[end]])
-            if (end - start + 1) * p * cand > budget:
+            cand = lens[order[end]]  # ascending: the chunk's longest so far
+            if cand > 2 * nmin or (end - start + 1) * p * cand > budget:
                 break
-            nmax = cand
             end += 1
         yield order[start:end]
         start = end

@@ -23,12 +23,23 @@ from pyspark.sql import functions as F
 
 from ..icelite import IceliteTable
 from ..operators.channels import channelize
+from ..operators.partitioning import ensure_min_partitions
 from ..operators.rollup import rollup_cascade, rollup_raw
 from ..schema import CHANNELS, TIER_PARENT, TIERS
 
 
 def _day(col):
     return F.date_format(col, "yyyy-MM-dd")
+
+
+def copart_partitions(spark: SparkSession, raw_bytes: int) -> int:
+    """Hash partitions of the copart shuffle: one per advisory partition
+    size of raw input, clamped to [1, spark.sql.shuffle.partitions]."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return max(1, min(cap, -(-raw_bytes // advisory)))
 
 
 class TierPipeline:
@@ -39,6 +50,19 @@ class TierPipeline:
     One full-input shuffle total, instead of per-tier agg exchanges plus a
     tier-size round-robin re-shuffle before each write.  plan="classic"
     keeps the per-tier exchanges.
+
+    Tier fan-out follows the data: the copart shuffle gets one partition per
+    spark.sql.adaptive.advisoryPartitionSizeInBytes of the todo days' raw
+    files (their on-disk size in the committed raw manifest), clamped to
+    [1, spark.sql.shuffle.partitions] (``copart_partitions``).  A small
+    backfill writes one file per day in each cascade tier instead of
+    shuffle.partitions tiny ones; a large one keeps the full fan-out.
+
+    Narrow inputs channelize on every core: a transcript scan with fewer
+    partitions than defaultParallelism (one small file, one row group) is
+    round-robined BEFORE channelize, and raw is written as-is from there
+    (still one exchange).  Wider inputs channelize in their scan tasks and
+    round-robin after.
 
     plan="auto" (default) picks by deployment shape, from the measured
     scaling matrix (BENCH/BASELINE.md, 129.9M turns, rollup phase):
@@ -82,6 +106,14 @@ class TierPipeline:
     def _missing_days(self, table: IceliteTable, days: set[str], reroll: set[str]) -> set[str]:
         return (days - table.committed_partitions()) | (days & reroll)
 
+    def _raw_bytes(self, days: set[str]) -> int:
+        """On-disk bytes of the committed raw files of ``days``."""
+        raw = self.tables["raw"]
+        parts = raw.snapshot().partitions
+        return sum(
+            os.path.getsize(raw._abs(f)) for d in days for f in parts[d]["files"]
+        )
+
     def run(
         self,
         transcripts: DataFrame | None = None,
@@ -105,8 +137,13 @@ class TierPipeline:
         reroll = set(reroll_days or ())
         t0 = time.time()
         if transcripts is not None:
-            ch = channelize(transcripts).withColumn("day", _day("ts"))
-            days = {r["day"] for r in ch.select("day").distinct().collect()}
+            days = {
+                r["day"]
+                for r in transcripts.select(_day("ts").alias("day")).distinct().collect()
+            }
+            wide = ensure_min_partitions(transcripts)
+            raw_cluster = "roundrobin" if wide is transcripts else "asis"
+            ch = channelize(wide).withColumn("day", _day("ts"))
         else:
             assert phase == "rollup", "rollup-only runs may omit transcripts"
             days = self.tables["raw"].committed_partitions()
@@ -127,9 +164,15 @@ class TierPipeline:
                         "partitions": sorted(todo),
                         "elapsed_s": round(time.time() - t0, 2),
                     },
+                    cluster=raw_cluster,
                 )
                 rows = sum(snap.partitions[d]["rows"] for d in todo)
-                metrics["raw"] = {"days": len(todo), "rows": rows}
+                metrics["raw"] = {
+                    "days": len(todo),
+                    "rows": rows,
+                    "elapsed_s": round(time.time() - t0, 2),
+                    **raw_tbl.last_write_timings,
+                }
         if phase == "ingest":
             metrics["elapsed_s"] = round(time.time() - t0, 2)
             return metrics
@@ -155,7 +198,7 @@ class TierPipeline:
                 src = src_tbl.read(self.spark, partitions=sorted(todo))
             if tier == "1m":
                 if self.plan == "copart":
-                    n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+                    n = copart_partitions(self.spark, self._raw_bytes(todo))
                     src = src.repartition(n, "conv_id")
                 out = rollup_raw(src, "1m")
             else:
@@ -190,7 +233,7 @@ class TierPipeline:
                 "days": len(todo),
                 "rows": rows,
                 "elapsed_s": round(time.time() - tt0, 2),
-                **getattr(tbl, "last_write_timings", {}),
+                **tbl.last_write_timings,
             }
         if with_composite:
             from ..operators.series import geomedian_mads_flat

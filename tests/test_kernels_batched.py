@@ -231,3 +231,34 @@ def test_batch_handles_many_series():
     got = nangeomedian_batch(X, lengths=lens)
     for i in (0, 150, 299):
         npt.assert_array_equal(got[i], _nangeomedian_axis_one(series[i]))
+
+
+def test_chunks_by_length_class():
+    """A hot series never shares a chunk with short ones: every chunk stays
+    within 2x of its shortest series, the chunks cover each series once,
+    and the chunked gm/MADs equal one unchunked batch call.  Padding a
+    short series far past its length can move the unchunked gm by one
+    float32 ulp (the f64 sums regroup); the chunked gm stays bit-identical
+    to the serial kernel."""
+    from hdstats_spark.operators.series import _chunks_by_cells
+
+    rng = np.random.default_rng(11)
+    series = _random_series(rng, nmin=3, nmax=20, count=40)
+    series += [(0.2 + 0.1 * rng.standard_normal((8, 500))).astype(np.float32) for _ in range(2)]
+    X, lens = pad_stack(series)
+    chunks = list(_chunks_by_cells(lens, X.shape[1]))
+    assert len(chunks) > 1
+    for idx in chunks:
+        assert lens[idx].max() <= 2 * lens[idx].min()
+    npt.assert_array_equal(np.sort(np.concatenate(chunks)), np.arange(len(series)))
+
+    whole = nangeomedian_batch(X, maxiters=20, lengths=lens)
+    whole_mads = mads_batch(X, whole)
+    for idx in chunks:
+        Xc, lc = pad_stack([series[i] for i in idx])
+        gm = nangeomedian_batch(Xc, maxiters=20, lengths=lc)
+        npt.assert_allclose(gm, whole[idx], rtol=1e-6, atol=0)
+        for k, v in mads_batch(Xc, gm).items():
+            npt.assert_allclose(v, whole_mads[k][idx], rtol=1e-5, atol=1e-7)
+        for i, g in zip(idx, gm):
+            npt.assert_array_equal(g, _nangeomedian_axis_one(series[i], maxiters=20))

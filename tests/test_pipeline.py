@@ -1,5 +1,7 @@
 """icelite snapshots, codec round-trip through Spark, pipeline resume."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -9,7 +11,7 @@ from hdstats_spark.icelite import IceliteTable
 from hdstats_spark.operators.channels import channelize
 from hdstats_spark.operators.rollup import rollup_raw
 from hdstats_spark.operators.series import series_table
-from hdstats_spark.plans.pipeline import TierPipeline
+from hdstats_spark.plans.pipeline import TierPipeline, copart_partitions
 from hdstats_spark.schema import CHANNELS
 
 
@@ -39,10 +41,101 @@ def test_copart_cascade_single_exchange(spark, transcripts):
     HashPartitioning(conv_id) satisfies every tier's grouping distribution."""
     from hdstats_spark.operators.rollup import rollup_cascade
 
-    src = channelize(transcripts).repartition(8, "conv_id")
-    t1d = rollup_cascade(rollup_cascade(rollup_raw(src, "1m"), "1h"), "1d")
-    plan = t1d._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
+    # both ends of the data-sized fan-out (copart_partitions)
+    for n in (1, 8):
+        src = channelize(transcripts).repartition(n, "conv_id")
+        t1d = rollup_cascade(rollup_cascade(rollup_raw(src, "1m"), "1h"), "1d")
+        plan = t1d._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+
+
+def test_copart_fanout_follows_raw_bytes(spark, transcripts, tmp_path):
+    """The copart shuffle is sized to the raw bytes: a small backfill writes
+    one file per day partition in every cascade tier, and the fan-out
+    reaches spark.sql.shuffle.partitions once the raw bytes exceed
+    shuffle.partitions x the advisory partition size."""
+    mb16 = 16 * 2**20  # the session's advisoryPartitionSizeInBytes
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert copart_partitions(spark, 0) == copart_partitions(spark, mb16) == 1
+    assert copart_partitions(spark, mb16 + 1) == 2
+    assert copart_partitions(spark, cap * mb16 + 1) == cap
+    assert copart_partitions(spark, 100 * cap * mb16) == cap
+
+    pipe = TierPipeline(spark, str(tmp_path / "fan"), plan="copart")
+    m = pipe.run(transcripts, "snap", phase="all")
+    for tier in ("1m", "1h", "1d"):
+        parts = pipe.tables[tier].snapshot().partitions
+        assert len(parts) == m["days_seen"]
+        assert all(len(p["files"]) == 1 for p in parts.values()), tier
+        assert m[tier]["n_files"] == m["days_seen"]
+    # the raw tier reports what the cascade tiers report
+    assert {"days", "rows", "elapsed_s", "write_s", "manifest_s", "n_files"} <= set(m["raw"])
+
+
+def test_narrow_input_channelizes_on_every_core(spark, transcripts, tmp_path, monkeypatch):
+    """A one-row-group parquet input (fewer scan partitions than cores) is
+    round-robined before channelize: the raw stage runs defaultParallelism
+    tasks and tokenizes above the exchange, and the tiers equal those built
+    from the same turns split across several files."""
+    import pyarrow.parquet as pq
+
+    one, many = str(tmp_path / "one"), str(tmp_path / "many")
+    par = spark.sparkContext.defaultParallelism
+    transcripts.coalesce(1).write.parquet(one)
+    # small files pack up to 3 per scan split here (open cost 4 MB each)
+    transcripts.repartition(3 * par).write.parquet(many)
+    (f,) = [f for f in os.listdir(one) if f.endswith(".parquet")]
+    assert pq.ParquetFile(os.path.join(one, f)).num_row_groups == 1
+    narrow = spark.read.parquet(one)
+    wide = spark.read.parquet(many)
+    assert narrow.rdd.getNumPartitions() < par <= wide.rdd.getNumPartitions()
+
+    raw_writes = []
+    orig = IceliteTable.overwrite_partitions
+
+    def spy(self, df, *a, **kw):
+        if self.root.endswith("tier_raw"):
+            raw_writes.append((df, kw.get("cluster")))
+        return orig(self, df, *a, **kw)
+
+    monkeypatch.setattr(IceliteTable, "overwrite_partitions", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("narrow-ingest", "narrow input raw tier")
+    try:
+        p1 = TierPipeline(spark, str(tmp_path / "t_one"), plan="copart")
+        p1.run(narrow, "one", phase="ingest")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup("narrow-ingest"))
+    # the raw commit is the group's last job; its last stage channelizes
+    # and writes
+    last_stage = max(st.getJobInfo(jobs[-1]).stageIds)
+    assert st.getStageInfo(last_stage).numTasks == par
+    df, cluster = raw_writes[-1]
+    assert cluster == "asis"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # children print below parents: tokenization sits above the exchange
+    assert plan.index("split(") < plan.index("RoundRobinPartitioning"), plan
+    p1.run(input_snapshot="one", phase="rollup")
+
+    p2 = TierPipeline(spark, str(tmp_path / "t_many"), plan="copart")
+    p2.run(wide, "many", phase="all")
+    assert raw_writes[-1][1] == "roundrobin"
+    for tier in ("raw", "1m", "1h", "1d"):
+        cols = ["conv_id", "turn_idx"] if tier == "raw" else ["conv_id", "bucket"]
+        a = p1.tables[tier].read(spark).orderBy(*cols).toPandas()
+        b = p2.tables[tier].read(spark).orderBy(*cols).toPandas()
+        pd.testing.assert_frame_equal(a, b)
+
+
+def test_icelite_unpartitioned_write_timings(spark, tmp_path):
+    """Unpartitioned commits (the gm and cold tiers) record their write
+    timings like partitioned ones."""
+    t = IceliteTable(str(tmp_path / "flat"))
+    snap = t.append(spark.range(100).repartition(3))
+    assert set(t.last_write_timings) == {"write_s", "manifest_s", "n_files"}
+    assert t.last_write_timings["n_files"] == len(snap.partitions["__all__"]["files"]) == 3
 
 
 def test_plan_auto_selection(spark, tmp_path):
